@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.cache import carry_cache, release_cache  # noqa: F401 (re-export)
+from ..core.cache import scoped, shared
 from .text import tokens
 
 
@@ -98,6 +100,7 @@ def word_shingles(df: DataFrame, n: int = 3, text_col: str = "text",
     )
 
 
+@scoped
 def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                         text_col: str = "text", id_col: str = "doc_id",
                         cache: bool | str = "auto",
@@ -118,10 +121,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     explode recompute (~2× wall locally). Default ``"auto"`` caches only
     while the INPUT is small (``spark.bioframe.shingleCacheBytes``,
     64 MB) — at 100 TB pinning an exploded ≫input-size frame is worse
-    than recomputing. When cached, the handle rides on the result
-    (``release_cache(out)`` unpersists it deterministically once the
-    result is materialized — never ``clearCache()``, which would evict
-    unrelated frames).
+    than recomputing.
 
     ``hash_shingles``: replace the shingle STRING join key (tens of
     bytes per exploded row, shuffled three ways) with its ``xxhash64``
@@ -166,15 +166,70 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     collected rows rather than a literal InSet (above
     ``spark.bioframe.hotInSetMax``, 1024): a 26k-literal In expression
     measured 17 s of pure driver plan-construction at sf0.1.
+
+    Internal persists follow :mod:`bioframe_spark.core.cache`: they live
+    until the result is released (``release_cache``) or garbage-collected;
+    a result chained (``out.select(...)``) and dropped loses them early —
+    ``carry_cache`` moves them onto the derived frame.
     """
     if df_strategy not in ("agg", "window"):
         raise ValueError(f"df_strategy must be 'agg' or 'window', got "
                          f"{df_strategy!r}")
-    window_cut = max_doc_freq is not None and df_strategy == "window"
-    if cache == "auto" and window_cut:
-        # the single-exchange formulation replaces the cache: consumers
-        # replay shuffle files, not the explode
-        cache = False
+    if max_doc_freq is None:
+        # counts-ride formulation (see docstring): n_sh = array size,
+        # computed map-side and carried through the join. Rebuilt from
+        # the array form of the same shingle set word_shingles explodes.
+        base = _spread_if_underpartitioned(df).select(
+            F.col(id_col), shingle_array(F.col(text_col), n).alias("__arr"))
+        # stacked select: __arr is consumed twice (size + passthrough),
+        # so CollapseProject leaves the chain in its own projection —
+        # split→transform→array_distinct evaluates ONCE per document
+        tbl = base.select(F.col(id_col), F.size("__arr").alias("__n_sh"),
+                          F.col("__arr"))
+        if cache == "auto":
+            # the cache is the MATERIALIZATION BARRIER for the shingle
+            # chain: without it each join side re-derives it from the
+            # raw text (and the inferred size(arr)>0 filter under the
+            # Generate pays the chain once more — PushDownPredicates
+            # substitutes the alias through any Project/Repartition, so
+            # no projection point can hold it). The ARRAY-form table is
+            # cached, not the exploded rows: the chain runs once into
+            # the cache, each join side pays only its own cheap explode
+            # of the stored arrays. Same plan-size gate as before: at
+            # 100 TB pinning a corpus-sized frame loses to recomputing,
+            # and the big-input join is a shingle-keyed SMJ whose two
+            # canonically-identical sides share one exchange anyway.
+            from ..operators.ops import _plan_size_bytes, _threshold
+            cache = _plan_size_bytes(df) <= _threshold(
+                df, "shingleCacheBytes", 64 << 20)
+        if cache:
+            tbl = shared(tbl)
+        sh = tbl.select(F.col(id_col), "__n_sh",
+                        F.explode("__arr").alias("shingle"))
+        if hash_shingles:
+            sh = sh.withColumn("shingle", F.xxhash64(F.col("shingle")))
+        a = sh.select(F.col(id_col).alias("id1"),
+                      F.col("__n_sh").alias("n1"), "shingle")
+        b = sh.select(F.col(id_col).alias("id2"),
+                      F.col("__n_sh").alias("n2"), "shingle")
+        return (
+            a.join(b, "shingle")
+            .filter(F.col("id1") < F.col("id2"))
+            # n1/n2 are functions of id1/id2 — identical groups, and the
+            # partial aggregate still collapses map-side
+            .groupBy("id1", "id2", "n1", "n2")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+            # long arithmetic like the old counts (ANSI overflow safety)
+            .withColumn("n_union", F.col("n1").cast("long")
+                        + F.col("n2") - F.col("n_common"))
+            # integer-form threshold test: inter/union >= t <=> inter >= t*union
+            .filter(F.col("n_common").cast("double")
+                    >= F.lit(threshold) * F.col("n_union"))
+            .select("id1", "id2", "n_common", "n_union")
+        )
+    # aggregated-counts formulation: every max_doc_freq variant (eager
+    # InSet / window / lazy anti-join) — see the docstring's r10 note
+    window_cut = df_strategy == "window"
     sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
     if hash_shingles:
         sh = sh.withColumn("shingle", F.xxhash64(F.col("shingle")))
@@ -188,7 +243,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                 .withColumn("__df", F.count(F.lit(1)).over(wsp))
                 .filter(F.col("__df") <= max_doc_freq)
                 .drop("__df"))
-    elif max_doc_freq is not None:
+    else:
         # 100 TB skew guard: a stopword shingle occurring in d documents
         # contributes d^2 join candidates — one hot key can dominate the
         # whole stage. Drop shingles with document frequency > cutoff
@@ -254,69 +309,14 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
             # 10 items), no join in the plan at all
             sh = sh.filter(~key.isin([int(v) for v in hot_pdf["__k"]]))
         # empty hot list: nothing to drop, skip the filter entirely
-    if max_doc_freq is None:
-        # counts-ride formulation (see docstring): n_sh = array size,
-        # computed map-side and carried through the join. Rebuilt from
-        # the array form of the same shingle set word_shingles explodes.
-        base = _spread_if_underpartitioned(df).select(
-            F.col(id_col), shingle_array(F.col(text_col), n).alias("__arr"))
-        # stacked select: __arr is consumed twice (size + passthrough),
-        # so CollapseProject leaves the chain in its own projection —
-        # split→transform→array_distinct evaluates ONCE per document
-        tbl = base.select(F.col(id_col), F.size("__arr").alias("__n_sh"),
-                          F.col("__arr"))
-        if cache == "auto":
-            # the cache is the MATERIALIZATION BARRIER for the shingle
-            # chain: without it each join side re-derives it from the
-            # raw text (and the inferred size(arr)>0 filter under the
-            # Generate pays the chain once more — PushDownPredicates
-            # substitutes the alias through any Project/Repartition, so
-            # no projection point can hold it). The ARRAY-form table is
-            # cached, not the exploded rows: the chain runs once into
-            # the cache, each join side pays only its own cheap explode
-            # of the stored arrays. Same plan-size gate as before: at
-            # 100 TB pinning a corpus-sized frame loses to recomputing,
-            # and the big-input join is a shingle-keyed SMJ whose two
-            # canonically-identical sides share one exchange anyway.
-            from ..operators.ops import _plan_size_bytes, _threshold
-            cache = _plan_size_bytes(df) <= _threshold(
-                df, "shingleCacheBytes", 64 << 20)
-        if cache:
-            tbl = tbl.cache()
-        sh = tbl.select(F.col(id_col), "__n_sh",
-                        F.explode("__arr").alias("shingle"))
-        if hash_shingles:
-            sh = sh.withColumn("shingle", F.xxhash64(F.col("shingle")))
-        a = sh.select(F.col(id_col).alias("id1"),
-                      F.col("__n_sh").alias("n1"), "shingle")
-        b = sh.select(F.col(id_col).alias("id2"),
-                      F.col("__n_sh").alias("n2"), "shingle")
-        out = (
-            a.join(b, "shingle")
-            .filter(F.col("id1") < F.col("id2"))
-            # n1/n2 are functions of id1/id2 — identical groups, and the
-            # partial aggregate still collapses map-side
-            .groupBy("id1", "id2", "n1", "n2")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-            # long arithmetic like the old counts (ANSI overflow safety)
-            .withColumn("n_union", F.col("n1").cast("long")
-                        + F.col("n2") - F.col("n_common"))
-            # integer-form threshold test: inter/union >= t <=> inter >= t*union
-            .filter(F.col("n_common").cast("double")
-                    >= F.lit(threshold) * F.col("n_union"))
-            .select("id1", "id2", "n_common", "n_union")
-        )
-        if cache:
-            _ride_cache(out, [tbl])
-        return out
-    # aggregated-counts formulation: every max_doc_freq variant (eager
-    # InSet / window / lazy anti-join) — see the docstring's r10 note
     if cache == "auto":
+        # the single-exchange window formulation replaces the cache:
+        # consumers replay shuffle files, not the explode
         from ..operators.ops import _plan_size_bytes, _threshold
-        cache = _plan_size_bytes(df) <= _threshold(
+        cache = not window_cut and _plan_size_bytes(df) <= _threshold(
             df, "shingleCacheBytes", 64 << 20)
     if cache:
-        sh = sh.cache()
+        sh = shared(sh)
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id1"), "shingle")
     b = sh.select(F.col(id_col).alias("id2"), "shingle")
@@ -332,79 +332,13 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     )
     c1 = counts.select(F.col(id_col).alias("id1"), F.col("n_sh").alias("n1"))
     c2 = counts.select(F.col(id_col).alias("id2"), F.col("n_sh").alias("n2"))
-    out = (
+    return (
         common.join(c1, "id1").join(c2, "id2")
         .withColumn("n_union", F.col("n1") + F.col("n2") - F.col("n_common"))
         # integer-form threshold test: inter/union >= t  <=>  inter >= t*union
         .filter(F.col("n_common").cast("double") >= F.lit(threshold) * F.col("n_union"))
         .select("id1", "id2", "n_common", "n_union")
     )
-    if cache:
-        _ride_cache(out, [sh])
-    return out
-
-
-def release_cache(df: DataFrame) -> None:
-    """Unpersist the internal frames an operator cached for
-    multi-consumer reuse (the handles ride on the result DataFrame).
-    Call once the result has been materialized — a deterministic
-    lifecycle, unlike ``spark.catalog.clearCache()`` which evicts every
-    cached frame in the session."""
-    for h in getattr(df, "_bioframe_cache", None) or []:
-        try:
-            h.unpersist()
-        except Exception:
-            # session already stopped — nothing left to free
-            pass
-
-
-def _unpersist_jdfs(jdfs) -> None:
-    for j in jdfs:
-        try:
-            j.unpersist(False)
-        except Exception:
-            pass
-
-
-def _ride_cache(out: DataFrame, handles: list) -> DataFrame:
-    """Attach persisted-handle lifecycle to a result DataFrame:
-    ``release_cache(out)`` frees the handles deterministically, and a
-    ``weakref.finalize`` backstop unpersists them when the result object
-    is garbage-collected — so a harness that materializes the result and
-    drops the reference (the oracle gate's loop shape) does not leak a
-    CacheManager entry for the session lifetime. DataFrame ``.persist``
-    registers in the JVM CacheManager, which — unlike raw RDD caches —
-    the ContextCleaner never evicts on GC; this finalizer is the
-    Python-side substitute.
-
-    The finalizer captures the JVM handles, NOT the Python DataFrames:
-    finalize args are strong references, so holding the Python objects
-    would pin a handle list containing ``out`` itself (the
-    ``incremental_dedup`` shape, where the persisted frame IS the
-    result) and the finalizer would never fire."""
-    import weakref
-
-    out._bioframe_cache = handles
-    out._bioframe_finalizer = weakref.finalize(
-        out, _unpersist_jdfs, [h._jdf for h in handles])
-    return out
-
-
-def carry_cache(derived: DataFrame, source: DataFrame) -> DataFrame:
-    """Move ride-on-result cache handles from ``source`` onto a frame
-    DERIVED from it (``source.select(...)`` etc.): without this, letting
-    ``source`` go out of scope fires its GC finalizer and unpersists the
-    internal caches BEFORE the derived plan (which still references
-    them) ever materializes — correct but re-executes the shared
-    subtrees the persist exists to share. No-op when ``source`` carries
-    no handles."""
-    handles = getattr(source, "_bioframe_cache", None)
-    if not handles:
-        return derived
-    fin = getattr(source, "_bioframe_finalizer", None)
-    if fin is not None:
-        fin.detach()
-    return _ride_cache(derived, handles)
 
 
 def _seeded_hash(col: Column, seed: int, hash_fn: str) -> Column:
@@ -979,6 +913,7 @@ def _simhash_kernel(bits: int):
     return _sig
 
 
+@scoped
 def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
                       text_col: str = "text", id_col: str = "doc_id",
                       bits: int = 64, hash_fn: str = "xxhash64",
@@ -998,9 +933,8 @@ def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
     under it) runs twice — measured 1.76 s vs 1.04 s at sf0.1. The
     cached frame is tiny (~16 bytes/doc: id + one long), so the
     ``"auto"`` gate (input plan size ≤
-    ``spark.bioframe.simhashCacheBytes``, 4 GB) is generous; the handle
-    rides on the result for ``release_cache()``, same lifecycle as
-    :func:`ngram_jaccard_pairs`.
+    ``spark.bioframe.simhashCacheBytes``, 4 GB) is generous; it follows
+    :mod:`bioframe_spark.core.cache`, like :func:`ngram_jaccard_pairs`.
 
     PRECONDITION: ``id_col`` values must be UNIQUE (the normal dedup
     contract — ids are document keys). The kept-once rule emits one row
@@ -1036,7 +970,7 @@ def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
     sig = simhash(df, text_col=text_col, id_col=id_col, bits=bits,
                   hash_fn=hash_fn)
     if cache:
-        sig = sig.cache()
+        sig = shared(sig)
     chunks = sig.select(
         id_col, "simhash", F.explode(chunks_arr).alias("c"),
     ).select(id_col, "simhash", "c.chunk_id", "c.chunk")
@@ -1066,8 +1000,6 @@ def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
         .filter(F.col("chunk_id") == first_eq)
         .select("id1", "id2", "hamming")
     )
-    if cache:
-        _ride_cache(pairs, [sig])
     return pairs
 
 
@@ -1540,6 +1472,7 @@ def winnow_fingerprints(df: DataFrame, k: int = 25, w: int = 16,
     return sub.mapInPandas(gen, out_schema)
 
 
+@scoped
 def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                     min_docs: int = 2, text_col: str = "text",
                     id_col: str = "doc_id",
@@ -1617,15 +1550,13 @@ def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
     # each doc emits a fingerprint at most once -> count(*) keyed by the
     # fingerprint == distinct-doc count (null fingerprints are excluded
     # from dup-flagging below, their group is moot)
-    cache_handles = []
     if strategy == "join":
         # persist the emission: the stats aggregate and the join probe
         # side are two consumers, and exchange reuse cannot bridge an
         # agg/join pair (the agg's exchange carries partial rows) — the
         # kernel would execute twice (plan_audit catch, §12-r07d);
         # release_cache(result) frees it
-        ex = ex.persist()
-        cache_handles.append(ex)
+        ex = shared(ex)
         stats = ex.groupBy("__h").agg(F.count(F.lit(1)).alias("__nd"))
         # LEFT: null-fingerprint rows (short/null docs) never match but
         # must survive into the per-doc rollup
@@ -1644,15 +1575,13 @@ def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
         "n_spans",
         F.when(F.col("n_spans").isNull(), F.lit(None))
          .otherwise(F.col("__dup")).cast("long").alias("n_dup_spans"))
-    out = out.withColumn(
+    return out.withColumn(
         "dup_frac",
         F.when(F.col("n_spans") > 0,
                F.round(F.col("n_dup_spans") / F.col("n_spans"), 9)))
-    if cache_handles:
-        _ride_cache(out, cache_handles)
-    return out
 
 
+@scoped
 def drop_duplicate_spans_docs(df: DataFrame, max_dup_frac: float = 0.5,
                               k: int = 25, w: int = 16,
                               text_col: str = "text",
@@ -1669,6 +1598,7 @@ def drop_duplicate_spans_docs(df: DataFrame, max_dup_frac: float = 0.5,
     return df.join(keep, id_col, "left_semi")
 
 
+@scoped
 def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                            min_docs: int = 2, text_col: str = "text",
                            id_col: str = "doc_id",
@@ -1738,7 +1668,6 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
             yield pd.DataFrame({"__id": ids, "__h": hs, "__pos": ps})
 
     ex = sub.mapInPandas(gen_pos, pos_schema)
-    cache_handles = []
     if strategy == "window":
         w_ord = Window.partitionBy("__h").orderBy("__id", "__pos")
         w_all = Window.partitionBy("__h")
@@ -1755,8 +1684,7 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                 .groupBy("__id")
                 .agg(F.collect_list("__pos").alias("__cuts")))
     else:
-        ex = ex.persist()
-        cache_handles.append(ex)
+        ex = shared(ex)
         stats = (ex.groupBy("__h")
                    .agg(F.count_distinct("__id").alias("__nd"),
                         F.min("__id").alias("__keeper"))
@@ -1808,10 +1736,7 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                                 "n_cut_spans": nspans,
                                 "n_removed_chars": nchars})
 
-    out = joined.mapInPandas(gen_cut, out_schema)
-    if cache_handles:
-        _ride_cache(out, cache_handles)
-    return out
+    return joined.mapInPandas(gen_cut, out_schema)
 
 
 def span_dup_pairs(df: DataFrame, k: int = 25, w: int = 16,

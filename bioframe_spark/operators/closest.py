@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.cache import scoped, shared
 from ..core.specs import _resolve_cols, _verify_columns
 from ..functions.intervals import overlap_predicate
 
@@ -592,9 +593,10 @@ def _closest_binned(
     # every later round's anti-join (quadratic plan blowup — measured 4×
     # wall at sf0.1), and could never exit early; with the count we stop
     # as soon as every row has its k neighbors (round 1 usually finishes
-    # all but the sparse tail). MEMORY_AND_DISK so a 100 TB remaining set
-    # spills instead of evicting.
-    from pyspark.storagelevel import StorageLevel
+    # all but the sparse tail). df2's persist, every rung's `found` and
+    # the final `remaining` are read by the returned plan, so they share
+    # its lifecycle (core.cache); an intermediate `remaining` is dropped
+    # as soon as the next rung's count has replaced it.
 
     # a zero-length df2 row exactly at INT64_MAX can never fall inside a
     # half-open probe window whose padded end saturates at INT64_MAX —
@@ -617,8 +619,7 @@ def _closest_binned(
     # rungs 2+ read the cache, not the source (the r4 ladder re-scanned
     # and re-measured df2 every escalation); skipped on the small path
     # (a small scan costs less than the cache bookkeeping)
-    df2p = (df2j.persist(StorageLevel.MEMORY_AND_DISK)
-            if n_rounds > 1 and not small else df2j)
+    df2p = shared(df2j) if n_rounds > 1 and not small else df2j
 
     done_parts = []
     remaining = d1
@@ -705,12 +706,11 @@ def _closest_binned(
             # already reached the span bound (completeness unconditional
             # — it keeps whatever candidates exist)
             ranked = ranked.filter((F.col("__cnt") >= k) | at_bound)
-        found = (
+        found = shared(
             ranked
             .withColumns({sk1 + sfx1: s1o, ek1 + sfx1: e1o})
             .drop("__rk", "__cnt", "__idist", "__cb_s" + sfx1,
-                  "__cb_e" + sfx1, "__cb_cap" + sfx1, "__cb_cap0" + sfx1)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+                  "__cb_e" + sfx1, "__cb_cap" + sfx1, "__cb_cap0" + sfx1))
         done_parts.append(found)
 
         def _left_null(misses):
@@ -734,9 +734,8 @@ def _closest_binned(
                 # uniform cap: a non-last rung's cap is < bound by the
                 # n_rounds construction, so the bound-exit branch below
                 # is provably empty — skip its anti-join entirely
-                nxt = remaining.join(
-                    matched_rids, "__cb_rid", "left_anti",
-                ).persist(StorageLevel.MEMORY_AND_DISK)
+                nxt = shared(remaining.join(
+                    matched_rids, "__cb_rid", "left_anti"))
             else:
                 # rows whose cap hit the bound THIS rung leave the
                 # ladder now either way: matched ones are in `found`;
@@ -750,9 +749,8 @@ def _closest_binned(
                 bound_rows = remaining.filter(cap_now >= F.lit(bound))
                 done_parts.append(_left_null(
                     bound_rows.join(matched_rids, "__cb_rid", "left_anti")))
-                nxt = remaining.filter(cap_now < F.lit(bound)).join(
-                    matched_rids, "__cb_rid", "left_anti",
-                ).persist(StorageLevel.MEMORY_AND_DISK)
+                nxt = shared(remaining.filter(cap_now < F.lit(bound)).join(
+                    matched_rids, "__cb_rid", "left_anti"))
             n_left = nxt.count()
             if remaining is not d1:
                 remaining.unpersist()
@@ -879,6 +877,7 @@ def _closest_broadcast(
     return out
 
 
+@scoped
 def closest(
     df1: DataFrame,
     df2: DataFrame | None = None,
@@ -909,6 +908,11 @@ def closest(
     mode), else binned when the combined input scan size exceeds
     ``_CLOSEST_COGROUP_BYTES`` and the feature set allows it (self-mode
     and callable tie-breakers need a kernel strategy).
+
+    Internal persists follow :mod:`bioframe_spark.core.cache`: they live
+    until the result is released (``release_cache``) or garbage-collected;
+    a result chained (``out.select(...)``) and dropped loses them early —
+    ``carry_cache`` moves them onto the derived frame.
     """
     if k < 1:
         raise ValueError("k>=1 required")

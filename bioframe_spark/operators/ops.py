@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import construction
+from ..core.cache import scoped, shared
 from ..core.specs import _resolve_cols, _verify_columns
 from ..core.stringops import parse_region
 from ..functions.intervals import (
@@ -1141,13 +1142,7 @@ def _distinct_islands_ranged(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     # scan → dedup agg → exchange → windows (no exchange reuse across the
     # branches — column pruning de-canonicalizes the subtrees). Same
     # persist-the-shared-frame convention as merge()'s premerge path.
-    # The handle rides on the returned frame (``_bioframe_cache``) so the
-    # public caller can attach the release_cache / weakref-finalize
-    # lifecycle to its result — without it, repeated calls in a
-    # long-lived session accumulate CacheManager entries (r10 advisor).
-    from pyspark.storagelevel import StorageLevel
-    dd = dd.persist(StorageLevel.MEMORY_AND_DISK)
-    dd_handle = dd
+    dd = shared(dd)
     # partitioning (keys, __rng) is preserved by the cache, so this
     # aggregate is map-side only (no exchange) over the persisted rows
     kcounts = dd.groupBy(*keys, "__rng").agg(F.max("__k").alias("__k"))
@@ -1172,9 +1167,7 @@ def _distinct_islands_ranged(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     # range's first effective border get __ofs = the previous chain's last
     # island number
     dd = dd.withColumn("__island", F.col("__ofs") + F.col("__local_isl"))
-    out = dd.drop("__rng", "__M", "__b", "__local_isl", "__ofs", "__k")
-    out._bioframe_cache = [dd_handle]
-    return out
+    return dd.drop("__rng", "__M", "__b", "__local_isl", "__ofs", "__k")
 
 
 _RANGED_PILEUP_BYTES = 64 << 20  # pileup's two-phase ranged scan-sum
@@ -1439,6 +1432,7 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
     return df.sparkSession.createDataFrame(rows, schema)
 
 
+@scoped
 def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
           on: list | None = None, range_width="auto",
           premerge="auto", local="auto") -> DataFrame:
@@ -1478,6 +1472,11 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
     plan construction EAGER for gated inputs (same contract as the
     coverage/count_overlaps broadcast kernels). Value-identical; falls
     back transparently over the caps.
+
+    Internal persists follow :mod:`bioframe_spark.core.cache`: they live
+    until the result is released (``release_cache``) or garbage-collected;
+    a result chained (``out.select(...)``) and dropped loses them early —
+    ``carry_cache`` moves them onto the derived frame.
     """
     ck, sk, ek = _resolve_cols(cols)
     _verify_columns(df, [ck, sk, ek], "merge")
@@ -1520,8 +1519,7 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
             # persist the Arrow fuse executes once per branch (measured
             # 58 -> 33 s on the 64x ladder). The persisted frame is the
             # FUSED rows — small by construction when the fuse pays off.
-            from pyspark.storagelevel import StorageLevel
-            pm = pm.persist(StorageLevel.MEMORY_AND_DISK)
+            pm = shared(pm)
             if range_width_auto:
                 # adaptive post-fuse construction: the persist makes the
                 # SHRUNKEN row count exact and nearly free — when it
@@ -1538,11 +1536,9 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
                 if n_pm <= _threshold(df, "premergeClassicRows",
                                       _PREMERGE_CLASSIC_ROWS):
                     range_width = None
-        handles = [pm]
         if range_width is not None:
             isl = _distinct_islands_ranged(pm, ck, sk, ek, on, min_dist,
                                            range_width, weight="__cnt")
-            handles += getattr(isl, "_bioframe_cache", [])
             out = isl.groupBy(ck, *on, "__island").agg(
                 F.min(sk).alias(sk),
                 F.max(ek).alias(ek),
@@ -1554,11 +1550,7 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
         nulls_out = nulls.select(
             ck, sk, ek, *on, F.lit(None).cast("long").alias("n_intervals")
         )
-        # internal persists ride the result for deterministic release
-        # (release_cache + weakref-finalize backstop; dedup.py owns the
-        # single helper copy)
-        from ..datapipe.dedup import _ride_cache
-        return _ride_cache(out.unionByName(nulls_out), handles)
+        return out.unionByName(nulls_out)
     if range_width is not None:
         nulls, valid = _null_key_rows(df, ck, sk, ek, on)
         isl = _distinct_islands_ranged(valid, ck, sk, ek, on, min_dist, range_width)
@@ -1571,12 +1563,7 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
         nulls_out = nulls.select(
             ck, sk, ek, *on, F.lit(None).cast("long").alias("n_intervals")
         )
-        out = out.unionByName(nulls_out)
-        handles = getattr(isl, "_bioframe_cache", [])
-        if handles:
-            from ..datapipe.dedup import _ride_cache
-            out = _ride_cache(out, handles)
-        return out
+        return out.unionByName(nulls_out)
     # Single-scan, single-shuffle, border-row path: null-key rows ride the
     # SAME window pass in their own partition group (flagged), so the
     # input is read once and no union branch exists.
@@ -1666,10 +1653,8 @@ def _cluster_islands(df: DataFrame, ck, sk, ek, on, min_dist,
     keys = [ck] + on
     if range_width is not None:
         isl_d = _distinct_islands_ranged(df, ck, sk, ek, on, min_dist, range_width)
-        cache_handles = getattr(isl_d, "_bioframe_cache", [])
     else:
         isl_d = _distinct_islands(df, ck, sk, ek, on, min_dist)
-        cache_handles = []
     # keep isl_d's consumer count minimal: every consumer re-expands the
     # whole distinct-islands subtree in the physical plan (no exchange
     # reuse), i.e. another scan + shuffle of the input at scale. Two
@@ -1719,9 +1704,7 @@ def _cluster_islands(df: DataFrame, ck, sk, ek, on, min_dist,
     # joined per-row result would re-expand the whole plan again
     totals = counts.agg(
         F.coalesce(F.sum("__n"), F.lit(0)).cast("long").alias("__base"))
-    out = out.drop(*["__k_" + k for k in keys], "__ofs")
-    out._bioframe_cache = cache_handles
-    return out, totals
+    return out.drop(*["__k_" + k for k in keys], "__ofs"), totals
 
 
 def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
@@ -1839,6 +1822,7 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
     return assigned, len(cl)
 
 
+@scoped
 def cluster(df: DataFrame, min_dist: int | None = 0, cols=None,
             on: list | None = None, return_input: bool = True,
             return_cluster_ids: bool = True,
@@ -1863,6 +1847,11 @@ def cluster(df: DataFrame, min_dist: int | None = 0, cols=None,
     when ``min_dist`` is not None and the on-columns are atomic; it
     falls back transparently if the cluster count exceeds
     ``spark.bioframe.smallInputMaxRows``.
+
+    Internal persists follow :mod:`bioframe_spark.core.cache`: they live
+    until the result is released (``release_cache``) or garbage-collected;
+    a result chained (``out.select(...)``) and dropped loses them early —
+    ``carry_cache`` moves them onto the derived frame.
     """
     ck, sk, ek = _resolve_cols(cols)
     _verify_columns(df, [ck, sk, ek], "cluster")
@@ -1898,12 +1887,10 @@ def cluster(df: DataFrame, min_dist: int | None = 0, cols=None,
             clustered, n_real = res
             totals = df.sparkSession.range(1).select(
                 F.lit(n_real).cast("long").alias("__base"))
-    cluster_handles = []
     if clustered is None:
         range_width = _auto_range_width(df, sk, ek, range_width)
         clustered, totals = _cluster_islands(valid, ck, sk, ek, on, min_dist,
                                              range_width=range_width)
-        cluster_handles = getattr(clustered, "_bioframe_cache", [])
         clustered = clustered.drop("__island")
     # null rows: singleton clusters numbered after the real ones; the
     # base comes from the aggregated island counts, NOT from
@@ -1936,11 +1923,6 @@ def cluster(df: DataFrame, min_dist: int | None = 0, cols=None,
     if not return_input:
         out = out.select([c for c in ["cluster", "cluster_start", "cluster_end"]
                           if c in out.columns])
-    if cluster_handles:
-        # internal ranged-islands persist rides the result (release_cache
-        # + weakref-finalize lifecycle — see _distinct_islands_ranged)
-        from ..datapipe.dedup import _ride_cache
-        out = _ride_cache(out, cluster_handles)
     return out
 
 
@@ -2312,6 +2294,7 @@ def count_overlaps(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
     return out if return_input else out.select("count")
 
 
+@scoped
 def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
              return_input: bool = True, cols1=None, cols2=None,
              strategy: str = "auto") -> DataFrame:
@@ -2341,7 +2324,13 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
     one extra small scan. Otherwise the join formulation: aggregate over
     DISTINCT (chrom,start,end) vs merged df2 (BOUNDED per-chrom product
     — merged intervals are disjoint) and equi-join the sums back onto
-    df1."""
+    df1.
+
+    Internal persists follow :mod:`bioframe_spark.core.cache`: they live
+    until the result is released (``release_cache``) or garbage-collected;
+    a result chained (``out.select(...)``) and dropped loses them early —
+    ``carry_cache`` moves them onto the derived frame.
+    """
     ck1, sk1, ek1 = _resolve_cols(cols1)
     ck2, sk2, ek2 = _resolve_cols(cols2)
     if strategy == "auto" and _plan_size_bytes(df2) <= _SMALL_INPUT_BYTES:
@@ -2360,12 +2349,9 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
             # no spread guard — see count_overlaps (light kernel rule)
             out = df1.withColumn("coverage", cov)
             return out if return_input else out.select("coverage")
-    m2 = merge(df2, min_dist=0, cols=cols2)
-    merged2 = m2.filter(F.col(ck2).isNotNull())
-    # keep merge's internal persist (if any) alive until THIS result is
-    # released — chaining .filter() would otherwise GC the merge result
-    # and fire its finalizer before the coverage plan ever runs
-    _merge_handles = getattr(m2, "_bioframe_cache", [])
+    # merge's internal persists outlive the chained filter: this call's
+    # cache scope carries them on the coverage result
+    merged2 = merge(df2, min_dist=0, cols=cols2).filter(F.col(ck2).isNotNull())
     coords = (
         df1.select(F.col(ck1).alias("__cc"), F.col(sk1).alias("__cs"),
                    F.col(ek1).alias("__ce"))
@@ -2391,11 +2377,7 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
         .withColumn("coverage", F.coalesce(F.col("__cov"), F.lit(0)))
         .drop("__cc", "__cs", "__ce", "__cov")
     )
-    out = out if return_input else out.select("coverage")
-    if _merge_handles:
-        from ..datapipe.dedup import _ride_cache
-        out = _ride_cache(out, _merge_handles)
-    return out
+    return out if return_input else out.select("coverage")
 
 
 def _complement_infinite(df: DataFrame, ck: str, sk: str, ek: str) -> DataFrame:
