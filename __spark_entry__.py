@@ -1304,14 +1304,15 @@ def q_dup_spans(spark, sf_dir):
 
 
 def q_dup_spans_join(spark, sf_dir):
-    """strategy="join": the AQE-skew-rescuable hot-fingerprint physical
-    path (aggregate + join-back instead of a window) — value-identical
-    to q_dup_spans, so it shares the same oracle. In-gate from r7 so the
-    newest physical path is pinned by the driver, not just a unit test
-    (r6 verdict #4)."""
+    """The hot-fingerprint gate row, kept at its registry position so
+    the first-50 gate keeps its shape. It once pinned an aggregate +
+    join-back variant of duplicate_spans; that variant lost to the
+    window path on every measured corpus (SCALING §12-r06c) and was
+    deleted, so the row now runs the one surviving window path and
+    shares q_dup_spans' oracle."""
     from bioframe_spark.datapipe import dedup as ddp
     docs = _t(spark, sf_dir, "documents")
-    return ddp.duplicate_spans(docs, k=25, w=16, strategy="join")
+    return ddp.duplicate_spans(docs, k=25, w=16)
 
 
 def q_bm25_multi(spark, sf_dir):
@@ -1635,14 +1636,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gopher": q_gopher,  # new this round
         "gopher_count": q_gopher_count,  # r6: count-measure A/B, no char sweep
         "chunk_docs": q_chunk_docs,  # new this round
-        "jaccard_cutoff": q_jaccard_cutoff,  # r6: literal hot-list plan in-gate
+        "jaccard_cutoff": q_jaccard_cutoff,  # r6: collected hot-list plan in-gate
         "contamination": q_contamination,  # new this round
         "dedup_components": q_dedup_components,
         "semdedup": q_semdedup,
         "bm25": q_bm25,
         "bm25_multi": q_bm25_multi,
         "dup_spans": q_dup_spans,
-        "dup_spans_join": q_dup_spans_join,  # r7: hot-fingerprint join path in-gate (r6 verdict #4)
+        "dup_spans_join": q_dup_spans_join,  # hot-fingerprint gate row; window path since the join variant was deleted
         "span_removal": q_span_removal,
         "vocab_topk": q_vocab_topk,  # r6 new operator in-gate
         "span_dup_pairs": q_span_dup_pairs,  # r7: single-kernel rewrite in-gate
@@ -3626,8 +3627,7 @@ FROM documents
         "bm25": bm25,
         "bm25_multi": bm25_multi,
         "dup_spans": dup_spans,
-        # strategy="join" is value-identical by contract — the same SQL
-        # oracle checks both physical paths
+        # the same window path as dup_spans — the same SQL oracle
         "dup_spans_join": dup_spans,
         "span_removal": span_removal,
         # MOSS-shape document pairs by shared winnowed fingerprints

@@ -105,8 +105,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                         text_col: str = "text", id_col: str = "doc_id",
                         cache: bool | str = "auto",
                         max_doc_freq: int | None = None,
-                        hash_shingles: bool = False,
-                        df_strategy: str = "agg") -> DataFrame:
+                        hash_shingles: bool = False) -> DataFrame:
     """Exact n-gram Jaccard similar pairs (id1 < id2).
 
     shingle-inverted-index self-join: explode → join on shingle → count
@@ -133,19 +132,6 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     with overwhelming probability. The knob for 100 TB corpora; off by
     default so the oracle-checked queries stay bit-exact portable.
 
-    ``df_strategy`` (only with ``max_doc_freq``): "agg" (default) takes
-    the document frequency with an EAGER map-side-combinable aggregate
-    over the hashed key and re-enters the hot list as a literal InSet
-    filter — partial aggregation means a boilerplate-grade hot shingle
-    never concentrates raw rows on one task. "window" computes df as
-    ``count(*)`` over the shingle partition INSIDE the one exchange the
-    self-join already pays — the explode runs ONCE and every consumer
-    (both join sides and the per-doc counts) replays shuffle files via
-    ReusedExchange instead of recomputing, so no cache is needed; the
-    cost is that a hot shingle's rows all land on one window task
-    before the cutoff drops them (no AQE rescue for windows). Same
-    tradeoff pair as duplicate_spans' strategy knob; value-identical.
-
     Plan shape (r10, guide §2.3/§2.4; DEFAULT path — ``max_doc_freq``
     None): per-doc shingle counts are the SIZE of the (distinct)
     shingle array — a map-side projection of the document row, not an
@@ -162,19 +148,19 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     cutoff counts depend on rows dropped after the explode, and the
     pre-explode equivalent (a higher-order array filter over the hot
     set) is an interpreted per-element pass that measured no better.
-    Large hot lists re-enter as a broadcast anti-join against the
-    collected rows rather than a literal InSet (above
-    ``spark.bioframe.hotInSetMax``, 1024): a 26k-literal In expression
-    measured 17 s of pure driver plan-construction at sf0.1.
+    ``max_doc_freq`` takes the document frequency with an EAGER
+    map-side-combinable aggregate over the hashed key (a
+    boilerplate-grade hot shingle never concentrates raw rows on one
+    task); the collected hot list re-enters as a broadcast anti-join
+    against a local relation. A literal InSet of the same keys measured
+    17 s of driver plan construction at 26k keys, and no faster than the
+    anti-join at 11–204 keys.
 
     Internal persists follow :mod:`bioframe_spark.core.cache`: they live
     until the result is released (``release_cache``) or garbage-collected;
     a result chained (``out.select(...)``) and dropped loses them early —
     ``carry_cache`` moves them onto the derived frame.
     """
-    if df_strategy not in ("agg", "window"):
-        raise ValueError(f"df_strategy must be 'agg' or 'window', got "
-                         f"{df_strategy!r}")
     if max_doc_freq is None:
         # counts-ride formulation (see docstring): n_sh = array size,
         # computed map-side and carried through the join. Rebuilt from
@@ -227,103 +213,70 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                     >= F.lit(threshold) * F.col("n_union"))
             .select("id1", "id2", "n_common", "n_union")
         )
-    # aggregated-counts formulation: every max_doc_freq variant (eager
-    # InSet / window / lazy anti-join) — see the docstring's r10 note
-    window_cut = df_strategy == "window"
+    # aggregated-counts formulation: every max_doc_freq variant — see
+    # the docstring's r10 note
     sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
     if hash_shingles:
         sh = sh.withColumn("shingle", F.xxhash64(F.col("shingle")))
-    if window_cut:
-        # the explicit isnotnull matches the filter the inner join
-        # pushes into ITS subtrees — without it the per-doc counts
-        # consumer's exchange differs by exactly that filter and the
-        # explode runs twice instead of once (measured in the plan)
-        wsp = Window.partitionBy("shingle")
-        sh = (sh.filter(F.col("shingle").isNotNull())
-                .withColumn("__df", F.count(F.lit(1)).over(wsp))
-                .filter(F.col("__df") <= max_doc_freq)
-                .drop("__df"))
-    else:
-        # 100 TB skew guard: a stopword shingle occurring in d documents
-        # contributes d^2 join candidates — one hot key can dominate the
-        # whole stage. Drop shingles with document frequency > cutoff
-        # BEFORE everything (join sides AND per-doc counts): the result
-        # is exact Jaccard over the informative-shingle space — the
-        # standard IR df-cutoff. A shingle that common carries ~no
-        # similarity signal; identical documents still score 1.0.
-        #
-        # The hot list is materialized ONCE to the driver and re-enters
-        # the plan as a LITERAL local relation: left lazy, the df-agg
-        # (a full shuffle of the exploded table) sat under the anti-join
-        # inside EVERY consumer's subtree and re-executed per consumer —
-        # the 64x datapipe rung measured 65.6 s with the cutoff vs
-        # 28.5 s without it while removing ZERO rows (exponent 1.31 vs
-        # 0.99). Hot shingles are few by construction (the cutoff
-        # targets stopword n-grams); the collect is hard-capped and
-        # falls back to the lazy join formulation over the cap. This
-        # makes the cutoff path driver-EAGER (one agg job) — same
-        # contract as the other kernel gates.
-        from ..operators.ops import (_SMALL_INPUT_MAX_ROWS, _bounded_pdf,
-                                     _threshold)
-        # df is computed on the 8-BYTE HASH of the shingle even when the
-        # pipeline keeps string shingles: the cutoff decision only needs
-        # key identity, and the df-agg is a full shuffle of the exploded
-        # table — longs cut its shuffle bytes ~4x vs n-gram strings (the
-        # residual 64x exponent lived in exactly this pass). A cold
-        # shingle colliding with a hot hash (~n_hot/2^64 per shingle) is
-        # dropped with it — same vanishing-probability caveat as
-        # hash_shingles, harmless for a skew guard.
-        key = (F.col("shingle") if hash_shingles
-               else F.xxhash64(F.col("shingle")))
-        hot = (sh.select(key.alias("__k"))
-               .groupBy("__k").agg(F.count(F.lit(1)).alias("__df"))
-               .filter(F.col("__df") > max_doc_freq)
-               .select("__k"))
-        cap = _threshold(df, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS)
-        # probe=False: the hot frame is a filtered aggregate — probing
-        # would execute the whole df-shuffle twice just to count an
-        # output that is small by construction; the collect stays
-        # bounded by maxResultSize + the post-hoc row check
-        hot_pdf = _bounded_pdf(hot, cap, probe=False)
-        # r10: the literal InSet only below spark.bioframe.hotInSetMax
-        # keys. A big hot list as an In(...) expression is a DRIVER
-        # bomb: the analyzer/optimizer re-walk every literal child each
-        # rule pass — measured 17 s of plan construction for the 26,530
-        # hot keys that sf0.1 produces at max_doc_freq=3 (the df-agg
-        # job itself is 3 s). Over the bar the collected list re-enters
-        # as a LOCAL relation + broadcast anti-join instead: still no
-        # re-execution of the df-agg subtree (the r6 hazard the literal
-        # was built to avoid — the join side is the driver-collected
-        # rows, not the lazy aggregate), same dropped-key set, and the
-        # broadcast hash probe replaces the 26k-literal expression.
-        inset_max = _threshold(df, "hotInSetMax", 1024)
-        if hot_pdf is None:
-            # implausibly many hot keys: keep the lazy formulation
-            sh = sh.join(F.broadcast(hot), key == F.col("__k"), "left_anti")
-        elif len(hot_pdf) > inset_max:
-            hot_local = df.sparkSession.createDataFrame(hot_pdf)
-            sh = sh.join(F.broadcast(hot_local), key == F.col("__k"),
-                         "left_anti")
-        elif len(hot_pdf):
-            # literal hot SET -> a pure scan-stage filter (InSet above
-            # 10 items), no join in the plan at all
-            sh = sh.filter(~key.isin([int(v) for v in hot_pdf["__k"]]))
-        # empty hot list: nothing to drop, skip the filter entirely
+    # 100 TB skew guard: a stopword shingle occurring in d documents
+    # contributes d^2 join candidates — one hot key can dominate the
+    # whole stage. Drop shingles with document frequency > cutoff
+    # BEFORE everything (join sides AND per-doc counts): the result
+    # is exact Jaccard over the informative-shingle space — the
+    # standard IR df-cutoff. A shingle that common carries ~no
+    # similarity signal; identical documents still score 1.0.
+    #
+    # The hot list is materialized ONCE to the driver and re-enters
+    # the plan as a local relation: left lazy, the df-agg (a full
+    # shuffle of the exploded table) sat under the anti-join inside
+    # EVERY consumer's subtree and re-executed per consumer — the 64x
+    # datapipe rung measured 65.6 s with the cutoff vs 28.5 s without
+    # it while removing ZERO rows (exponent 1.31 vs 0.99). Hot
+    # shingles are few by construction (the cutoff targets stopword
+    # n-grams); the collect is hard-capped and falls back to the lazy
+    # join formulation over the cap. This makes the cutoff path
+    # driver-EAGER (one agg job) — same contract as the other kernel
+    # gates.
+    from ..operators.ops import (_SMALL_INPUT_MAX_ROWS, _bounded_pdf,
+                                 _plan_size_bytes, _threshold)
+    # df is computed on the 8-BYTE HASH of the shingle even when the
+    # pipeline keeps string shingles: the cutoff decision only needs
+    # key identity, and the df-agg is a full shuffle of the exploded
+    # table — longs cut its shuffle bytes ~4x vs n-gram strings (the
+    # residual 64x exponent lived in exactly this pass). A cold
+    # shingle colliding with a hot hash (~n_hot/2^64 per shingle) is
+    # dropped with it — same vanishing-probability caveat as
+    # hash_shingles, harmless for a skew guard.
+    key = (F.col("shingle") if hash_shingles
+           else F.xxhash64(F.col("shingle")))
+    hot = (sh.select(key.alias("__k"))
+           .groupBy("__k").agg(F.count(F.lit(1)).alias("__df"))
+           .filter(F.col("__df") > max_doc_freq)
+           .select("__k"))
+    cap = _threshold(df, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS)
+    # probe=False: the hot frame is a filtered aggregate — probing
+    # would execute the whole df-shuffle twice just to count an
+    # output that is small by construction; the collect stays
+    # bounded by maxResultSize + the post-hoc row check
+    hot_pdf = _bounded_pdf(hot, cap, probe=False)
+    if hot_pdf is None:
+        # implausibly many hot keys: keep the lazy formulation
+        sh = sh.join(F.broadcast(hot), key == F.col("__k"), "left_anti")
+    elif len(hot_pdf):
+        # the collected rows, not the lazy aggregate, are the join
+        # side: no re-execution of the df-agg subtree per consumer
+        hot_local = df.sparkSession.createDataFrame(hot_pdf)
+        sh = sh.join(F.broadcast(hot_local), key == F.col("__k"),
+                     "left_anti")
+    # empty hot list: nothing to drop, skip the join entirely
     if cache == "auto":
-        # the single-exchange window formulation replaces the cache:
-        # consumers replay shuffle files, not the explode
-        from ..operators.ops import _plan_size_bytes, _threshold
-        cache = not window_cut and _plan_size_bytes(df) <= _threshold(
+        cache = _plan_size_bytes(df) <= _threshold(
             df, "shingleCacheBytes", 64 << 20)
     if cache:
         sh = shared(sh)
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id1"), "shingle")
     b = sh.select(F.col(id_col).alias("id2"), "shingle")
-    if window_cut:
-        # force SMJ so a statically-planned broadcast build side can't
-        # bypass the shared exchange (same guard as span_dup_pairs)
-        b = b.hint("merge")
     common = (
         a.join(b, "shingle")
         .filter(F.col("id1") < F.col("id2"))
@@ -1472,11 +1425,9 @@ def winnow_fingerprints(df: DataFrame, k: int = 25, w: int = 16,
     return sub.mapInPandas(gen, out_schema)
 
 
-@scoped
 def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                     min_docs: int = 2, text_col: str = "text",
                     id_col: str = "doc_id",
-                    strategy: str = "window",
                     hash: str = "md5") -> DataFrame:
     """Per-document repeated-span statistics — the Spark re-expression of
     exact-substring training-data dedup (Lee et al. 2022, "Deduplicating
@@ -1504,20 +1455,11 @@ def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
     plan-size-gated cache fixed it at bench scale but the gate flips off
     exactly where re-execution hurts most — the 16x ladder rung measured
     5x wall on 4x data. Single-consumer-chain is the fix, not caching.)
-    ``strategy``: "window" (default) computes the distinct-doc count as
-    ``count(*)`` over the fingerprint partition — one shuffle, but a
-    corpus-HOT fingerprint (boilerplate shared by most documents) lands
-    its whole partition on one task, and windows have no AQE skew
-    rescue. "join" computes the same count as a map-side-combinable
-    aggregate and LEFT-joins it back on the fingerprint — one extra
-    shuffle stage, but the join is exactly what AQE's skew-join
-    splitting handles, so hot keys spread across tasks. Value-identical
-    (pinned by test); pick "join" for corpora with boilerplate-grade
-    repetition (measured under the 90%-hot shape in SCALING §12-r06c).
+    A corpus-HOT fingerprint (boilerplate shared by most documents)
+    lands its whole window partition on one task; the 90%-hot corpus of
+    SCALING §12-r06c still ran faster this way than as an aggregate
+    joined back on the fingerprint.
     """
-    if strategy not in ("window", "join"):
-        raise ValueError(f"strategy must be 'window' or 'join', got "
-                         f"{strategy!r}")
     from pyspark.sql import types as T
 
     out_schema = T.StructType([
@@ -1550,20 +1492,8 @@ def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
     # each doc emits a fingerprint at most once -> count(*) keyed by the
     # fingerprint == distinct-doc count (null fingerprints are excluded
     # from dup-flagging below, their group is moot)
-    if strategy == "join":
-        # persist the emission: the stats aggregate and the join probe
-        # side are two consumers, and exchange reuse cannot bridge an
-        # agg/join pair (the agg's exchange carries partial rows) — the
-        # kernel would execute twice (plan_audit catch, §12-r07d);
-        # release_cache(result) frees it
-        ex = shared(ex)
-        stats = ex.groupBy("__h").agg(F.count(F.lit(1)).alias("__nd"))
-        # LEFT: null-fingerprint rows (short/null docs) never match but
-        # must survive into the per-doc rollup
-        flagged = ex.join(stats, "__h", "left")
-    else:
-        nd = F.count(F.lit(1)).over(Window.partitionBy("__h"))
-        flagged = ex.withColumn("__nd", nd)
+    nd = F.count(F.lit(1)).over(Window.partitionBy("__h"))
+    flagged = ex.withColumn("__nd", nd)
     out = (flagged.groupBy("__id")
            .agg(
                F.max("__n").cast("long").alias("n_spans"),
@@ -1581,7 +1511,6 @@ def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                F.round(F.col("n_dup_spans") / F.col("n_spans"), 9)))
 
 
-@scoped
 def drop_duplicate_spans_docs(df: DataFrame, max_dup_frac: float = 0.5,
                               k: int = 25, w: int = 16,
                               text_col: str = "text",
@@ -1598,12 +1527,10 @@ def drop_duplicate_spans_docs(df: DataFrame, max_dup_frac: float = 0.5,
     return df.join(keep, id_col, "left_semi")
 
 
-@scoped
 def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                            min_docs: int = 2, text_col: str = "text",
                            id_col: str = "doc_id",
-                           hash: str = "md5",
-                           strategy: str = "window") -> DataFrame:
+                           hash: str = "md5") -> DataFrame:
     """CUT duplicated spans out of the corpus, keeping one canonical
     copy — the removal half of Lee et al. 2022's exact-substring dedup
     ("remove all but one occurrence of each duplicated substring").
@@ -1623,28 +1550,19 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
     row per input document, text rewritten (NULL text passes through
     with NULL counters; untouched docs report 0/0).
 
-    Scale shape — the position kernel runs EXACTLY ONCE (default
-    ``strategy="window"``): its (id, hash, pos) emission crosses ONE
-    exchange on the fingerprint, where two same-partitioning windows
-    compute the distinct-doc count (a lag-based first-occurrence flag
-    summed over the partition — window ``count_distinct`` doesn't
-    exist) and the min-id keeper; the per-doc cut-list rollup (bounded
+    Scale shape — the position kernel runs EXACTLY ONCE: its (id, hash,
+    pos) emission crosses ONE exchange on the fingerprint, where two
+    same-partitioning windows compute the distinct-doc count (a
+    lag-based first-occurrence flag summed over the partition — window
+    ``count_distinct`` doesn't exist) and the min-id keeper; the per-doc cut-list rollup (bounded
     by the doc's own gram density — never corpus-sized) and one shuffle
     of the corpus text into the Arrow cut kernel follow. (The first
     formulation aggregated stats and joined them back — the kernel
     executed once under the agg AND once under the join's probe side,
     the §12-r06c multi-consumer hazard again; caught by
-    tools/plan_audit.py, pinned at one in test_plan_budgets.)
-    ``strategy="join"`` keeps the aggregate+join shape — its stats join
-    is AQE-skew-splittable where a corpus-hot fingerprint would pin the
-    window variant's partition on one task — and PERSISTS the kernel
-    emission so the two consumers share one execution
-    (``release_cache(result)`` frees it). The corpus text moves through
-    exactly one exchange in both modes.
+    tools/plan_audit.py, pinned at one in test_plan_budgets.) The corpus
+    text moves through exactly one exchange.
     """
-    if strategy not in ("window", "join"):
-        raise ValueError(f"strategy must be 'window' or 'join', got "
-                         f"{strategy!r}")
     from pyspark.sql import types as T
 
     pos_schema = T.StructType([
@@ -1668,32 +1586,20 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
             yield pd.DataFrame({"__id": ids, "__h": hs, "__pos": ps})
 
     ex = sub.mapInPandas(gen_pos, pos_schema)
-    if strategy == "window":
-        w_ord = Window.partitionBy("__h").orderBy("__id", "__pos")
-        w_all = Window.partitionBy("__h")
-        lagid = F.lag("__id").over(w_ord)
-        annotated = (
-            ex.withColumn("__new",
-                          F.when(lagid.isNull()
-                                 | (lagid != F.col("__id")), 1).otherwise(0))
-              .withColumn("__nd", F.sum("__new").over(w_all))
-              .withColumn("__keeper", F.min("__id").over(w_all)))
-        cuts = (annotated
-                .filter((F.col("__nd") >= F.lit(min_docs))
-                        & (F.col("__id") != F.col("__keeper")))
-                .groupBy("__id")
-                .agg(F.collect_list("__pos").alias("__cuts")))
-    else:
-        ex = shared(ex)
-        stats = (ex.groupBy("__h")
-                   .agg(F.count_distinct("__id").alias("__nd"),
-                        F.min("__id").alias("__keeper"))
-                   .filter(F.col("__nd") >= F.lit(min_docs))
-                   .select("__h", "__keeper"))
-        cuts = (ex.join(stats, "__h")
-                  .filter(F.col("__id") != F.col("__keeper"))
-                  .groupBy("__id")
-                  .agg(F.collect_list("__pos").alias("__cuts")))
+    w_ord = Window.partitionBy("__h").orderBy("__id", "__pos")
+    w_all = Window.partitionBy("__h")
+    lagid = F.lag("__id").over(w_ord)
+    annotated = (
+        ex.withColumn("__new",
+                      F.when(lagid.isNull()
+                             | (lagid != F.col("__id")), 1).otherwise(0))
+          .withColumn("__nd", F.sum("__new").over(w_all))
+          .withColumn("__keeper", F.min("__id").over(w_all)))
+    cuts = (annotated
+            .filter((F.col("__nd") >= F.lit(min_docs))
+                    & (F.col("__id") != F.col("__keeper")))
+            .groupBy("__id")
+            .agg(F.collect_list("__pos").alias("__cuts")))
 
     out_schema = T.StructType([
         df.schema[id_col], df.schema[text_col],

@@ -1,7 +1,9 @@
-"""Round-10 optimization pins: jaccard counts-ride equivalence, hot-list
-InSet/anti-join equivalence, ride-cache lifecycle on the ranged islands
+"""Round-10 optimization pins: jaccard counts-ride equivalence, the
+hot-list anti-join plan shape, ride-cache lifecycle on the ranged islands
 persist, carry_cache hand-off, and the streaming state-shuffle sizing
 helper."""
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,30 +24,37 @@ def docs(spark, tmp_path_factory):
 
 
 def test_jaccard_counts_ride_matches_aggregated_counts(spark, docs):
-    # default path = the r10 counts-ride formulation; the window-cutoff
-    # path with a never-firing cutoff = the historical aggregated-counts
-    # formulation over the identical shingle set
+    # default path = the r10 counts-ride formulation; a never-firing
+    # cutoff = the aggregated-counts formulation over the identical
+    # shingle set (empty hot list, no anti-join)
     ride = sorted(map(tuple, dedup.ngram_jaccard_pairs(
         docs, n=3, threshold=0.3).collect()))
     agg = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.3, max_doc_freq=10**9,
-        df_strategy="window").collect()))
+        docs, n=3, threshold=0.3, max_doc_freq=10**9).collect()))
     assert ride == agg and len(ride) > 0
 
 
-def test_jaccard_hot_list_inset_vs_antijoin(spark, docs):
-    # the same cutoff through the literal-InSet path and the
-    # over-the-bar broadcast anti-join path must drop the same keys
-    kw = dict(n=3, threshold=0.3, max_doc_freq=60)
-    inset = sorted(map(tuple,
-                       dedup.ngram_jaccard_pairs(docs, **kw).collect()))
-    spark.conf.set("spark.bioframe.hotInSetMax", "1")
+def test_jaccard_hot_list_antijoin_plan(spark, docs):
+    # a small non-empty hot list re-enters as a broadcast anti-join
+    # against the collected local relation — never as a literal In/InSet
+    # filter on the shingle hash
+    kw = dict(n=3, threshold=0.3, max_doc_freq=60, cache=False)
+    out = dedup.ngram_jaccard_pairs(docs, **kw)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join LeftAnti" in plan, plan
+    assert re.search(r"LocalRelation \[__k", plan), plan
+    assert not re.search(r"\bINSET\b|\bIN \(", plan), plan
+    got = sorted(map(tuple, out.collect()))
+    # the over-cap fallback: the lazy df-aggregate is the join side
+    spark.conf.set("spark.bioframe.smallInputMaxRows", "0")
     try:
-        anti = sorted(map(tuple,
-                          dedup.ngram_jaccard_pairs(docs, **kw).collect()))
+        lazy = dedup.ngram_jaccard_pairs(docs, **kw)
+        lazy_plan = lazy._jdf.queryExecution().optimizedPlan().toString()
+        want = sorted(map(tuple, lazy.collect()))
     finally:
-        spark.conf.unset("spark.bioframe.hotInSetMax")
-    assert inset == anti and len(inset) > 0
+        spark.conf.unset("spark.bioframe.smallInputMaxRows")
+    assert "LocalRelation" not in lazy_plan, lazy_plan
+    assert got == want and len(got) > 0
 
 
 def test_jaccard_ride_cache_lifecycle(spark, docs):

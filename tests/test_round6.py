@@ -761,26 +761,6 @@ def test_bm25_many_matches_single(spark):
             assert abs(got[d] - single[d]) <= 1e-6
 
 
-def test_duplicate_spans_join_strategy_identical(spark):
-    import pytest
-    from bioframe_spark.datapipe import dedup as ddp
-
-    docs = _mk_docs(spark, [
-        (1, "the quick brown fox jumps over the lazy dog again and again ok"),
-        (2, "zz the quick brown fox jumps over the lazy dog again and again"),
-        (3, "completely unrelated text with different spans entirely here"),
-        (4, None), (5, "short"),
-    ])
-    a = sorted(map(tuple,
-                   ddp.duplicate_spans(docs, k=10, w=4).collect()))
-    b = sorted(map(tuple,
-                   ddp.duplicate_spans(docs, k=10, w=4,
-                                       strategy="join").collect()))
-    assert a == b
-    with pytest.raises(ValueError):
-        ddp.duplicate_spans(docs, strategy="bogus")
-
-
 def test_span_dup_pairs_and_resolution(spark):
     from bioframe_spark.datapipe import dedup as ddp
 

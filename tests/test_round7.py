@@ -570,25 +570,3 @@ def test_coarse_assign_kernel_choice(spark):
     Cn = C.astype(np.float64)
     Cn /= np.sqrt((Cn * Cn).sum(axis=1))[:, None]
     assert (grp == (Cn @ G.T).argmax(axis=1)).all()
-
-
-def test_jaccard_df_strategy_window_identical_single_explode(spark):
-    """df_strategy="window" folds the df-cutoff into the one exchange
-    the self-join pays: value-identical to the default eager-agg path,
-    and the explode (Generate) appears ONCE in the executed plan — both
-    join sides and the per-doc counts replay the same shuffle."""
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i % 3} epsilon zeta eta theta")
-         for i in range(40)] + [(99, None)],
-        "doc_id long, text string")
-    agg = dedup.ngram_jaccard_pairs(docs, threshold=0.3, max_doc_freq=30)
-    win = dedup.ngram_jaccard_pairs(docs, threshold=0.3, max_doc_freq=30,
-                                    df_strategy="window")
-    ra = sorted(map(tuple, agg.collect()))
-    rw = sorted(map(tuple, win.collect()))
-    assert ra == rw and len(ra) > 0
-    plan = win._jdf.queryExecution().executedPlan().toString() \
-        .split("== Initial Plan ==")[0]
-    assert plan.count("Generate") == 1, plan
-    with pytest.raises(ValueError, match="df_strategy"):
-        dedup.ngram_jaccard_pairs(docs, max_doc_freq=5, df_strategy="x")

@@ -40,10 +40,10 @@ def test_ride_cache_finalizer_releases_on_gc(spark):
     handles when the result object is collected (ADVICE r7 #1)."""
     spark.catalog.clearCache()
     base = _n_cached(spark)
-    out = dedup.duplicate_spans(_docs(spark), k=5, w=4, strategy="join")
+    out = dedup.ngram_jaccard_pairs(_docs(spark), cache=True)
     handles = out._bioframe_cache
     out.count()
-    assert _n_cached(spark) > base, "join strategy should persist its emission"
+    assert _n_cached(spark) > base, "cache=True should persist the shingles"
     del out
     gc.collect()
     assert _wait_cached(spark, base), \

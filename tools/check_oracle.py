@@ -81,7 +81,7 @@ def main():
             # ops that persist internal frames for multi-consumer reuse
             # ride the handles on the result — free them now that the
             # query is materialized (ADVICE r7: the harness leaked one
-            # cached dataset per q_dup_spans_join / q_lm_score run)
+            # cached dataset per persisting query, e.g. q_lm_score)
             from bioframe_spark.datapipe.dedup import release_cache
             release_cache(res)
         except Exception as e:

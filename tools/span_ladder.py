@@ -10,7 +10,8 @@
              cosines (and the duplicate-group structure) are preserved
              EXACTLY while cross-copy cosines scramble to ~0
   jaccard  — jaccard_cutoff re-rung after the hashed-df cutoff
-             (df computed on xxhash64 keys + literal InSet filter)
+             (df computed on xxhash64 keys, hot list collected and
+             re-entered as a broadcast anti-join)
 
 Text replication reuses the token-bijection scheme
 (tools/datapipe_ladder64.rep_docs_any): char-gram structure within a
@@ -137,15 +138,6 @@ def main():
                 _measure(results, rows_out, "jaccard_cutoff", k,
                          lambda: dedup.ngram_jaccard_pairs(
                              docs, threshold=0.4, max_doc_freq=100), reps)
-                _measure(results, rows_out, "jaccard_cutoff[win]", k,
-                         lambda: dedup.ngram_jaccard_pairs(
-                             docs, threshold=0.4, max_doc_freq=100,
-                             df_strategy="window"), reps)
-                _measure(results, rows_out, "jaccard_cutoff[win+hash]", k,
-                         lambda: dedup.ngram_jaccard_pairs(
-                             docs, threshold=0.4, max_doc_freq=100,
-                             df_strategy="window", hash_shingles=True),
-                         reps)
             docs.unpersist()
 
     if "scoring" in sections:
