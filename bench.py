@@ -50,6 +50,60 @@ def force_count(df) -> int:
         F.max(F.xxhash64(*cols)).alias("h")).collect()[0]
     return row["n"]
 
+
+def n_persistent(spark) -> int:
+    """RDDs the session holds in storage: pinned inputs plus any
+    internal persist an op leaked past its result."""
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def repin(spark, pinned) -> None:
+    """The leaked-cache reset. Ops with internal persists (the eager
+    closest-binned ladder) leave cached intermediates behind; Spark's
+    CacheManager matches an identical re-run's plan against them, so
+    rep 2+ would time the cache, not the plan. Drop everything and
+    re-pin the inputs (outside the timer) so every rep pays the full
+    plan."""
+    spark.catalog.clearCache()
+    for df in pinned:
+        df.cache().count()
+
+
+def bench_session(app: str, sf_dir: str):
+    """The bench's session shape, shared by tools/probe_query.py and
+    tools/dump_plans.py so their timings and plans are the ones the
+    bench takes. Returns ``(spark, pinned)``; ``repin(spark, pinned)``
+    is the reset."""
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    spark = get_spark(app)
+    spark.sparkContext.setLogLevel("ERROR")
+    # Size the session to the benchmark scale: at sub-GB inputs AQE's
+    # stage-materialization barriers cost more wall clock than runtime
+    # re-planning saves (measured ~0.2-1.5 s/query here). On a real
+    # cluster at TB scale leave AQE ON (get_spark's default) — skew-join
+    # splitting and runtime coalescing dominate there.
+    if sf <= 1:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+
+    # warm the JVM / parquet footers with a trivial action
+    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+
+    # Pre-materialize the synthetic DERIVED interval tables (cache +
+    # count), then point the entry module's derivation helpers at the
+    # cached frames. The reference baseline (BASELINE.md / VERDICT) is
+    # measured from in-memory pandas frames of the same derived data, so
+    # timing the parquet scan + derivation inside every query would charge
+    # this engine an input tax the baseline doesn't pay. Raw-table queries
+    # (documents/embeddings/events) still read parquet directly.
+    pinned = []
+    for fn_name in ("ivals_a", "ivals_b", "ivals_s", "ivals_p"):
+        cached = getattr(em, fn_name)(spark, sf_dir).cache()
+        cached.count()
+        pinned.append(cached)
+        setattr(em, fn_name, lambda spark, sf_dir, _df=cached: _df)
+    return spark, pinned
+
+
 BENCH_QUERIES = [
     # the headline interval engine ops
     "overlap_inner",
@@ -117,18 +171,7 @@ BENCH_QUERIES = [
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Size the session to the benchmark scale: at sub-GB inputs AQE's
-    # stage-materialization barriers cost more wall clock than runtime
-    # re-planning saves (measured ~0.2-1.5 s/query here). On a real
-    # cluster at TB scale leave AQE ON (get_spark's default) — skew-join
-    # splitting and runtime coalescing dominate there.
-    if sf <= 1:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    # warm the JVM / parquet footers with a trivial action
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    spark, pinned = bench_session("bench", sf_dir)
 
     # CONTENTION SENTINEL (r5 verdict #4): a fixed trivial probe (cached
     # 1M-row count + hash) timed before and after the query loop. Its
@@ -151,33 +194,6 @@ def main():
         return round(sorted(samples)[len(samples) // 2], 3)
 
     sentinel_pre = probe_sentinel()
-
-    # Pre-materialize the synthetic DERIVED interval tables (cache +
-    # count), then point the entry module's derivation helpers at the
-    # cached frames. The reference baseline (BASELINE.md / VERDICT) is
-    # measured from in-memory pandas frames of the same derived data, so
-    # timing the parquet scan + derivation inside every query would charge
-    # this engine an input tax the baseline doesn't pay. Raw-table queries
-    # (documents/embeddings/events) still read parquet directly.
-    pinned = []
-    for fn_name in ("ivals_a", "ivals_b", "ivals_s", "ivals_p"):
-        cached = getattr(em, fn_name)(spark, sf_dir).cache()
-        cached.count()
-        pinned.append(cached)
-        setattr(em, fn_name, lambda spark, sf_dir, _df=cached: _df)
-
-    def _n_persistent() -> int:
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
-    def _reset_extra_caches():
-        # Ops with internal persists (the eager closest-binned ladder)
-        # leave cached intermediates behind; Spark's CacheManager matches
-        # an identical re-run's plan against them, so rep 2+ would time
-        # the cache, not the plan. Drop everything and re-pin the inputs
-        # (outside the timer) so every rep pays the full plan.
-        spark.catalog.clearCache()
-        for df in pinned:
-            df.cache().count()
 
     # Single-shot timings on a cold 32-core local JVM swing up to 5x
     # (JIT, codegen compilation, shuffle-file page cache). Run each query
@@ -223,13 +239,13 @@ def main():
         fn = qs[name]
         samples = []
         n = 0
-        base_cached = _n_persistent()
+        base_cached = n_persistent(spark)
         for rep in range(reps):
             t0 = time.time()
             n = force_count(fn(spark, sf_dir))
             samples.append(time.time() - t0)
-            if _n_persistent() > base_cached:
-                _reset_extra_caches()
+            if n_persistent(spark) > base_cached:
+                repin(spark, pinned)
         cold[name] = round(samples[0], 3)
         med = sorted(samples)[len(samples) // 2]
         times[name] = round(med, 3)

@@ -399,7 +399,7 @@ _CLOSEST_COGROUP_BYTES = 128 << 20  # above this combined scan size the
 # switches to the binned cap-escalation plan. Crossover measured on a
 # coordinate-shifted replication of the sf0.1 workload (8 chroms):
 # 72 MB combined -> cogroup 7.6 s vs binned 11.6 s; 288 MB -> cogroup
-# 66 s vs binned 24 s (tools/scale_ladder.py)
+# 66 s vs binned 24 s (tools/scale_ladder.py --only closest)
 
 
 def _small_df2(df2: DataFrame) -> bool:

@@ -1218,7 +1218,8 @@ _CLUSTER_PREMERGE_BYTES = 8 << 20  # cluster's premerge crossover (see
 _PREMERGE_BYTES = 32 << 20  # above this scan size merge shrinks its rows
 # MAP-SIDE before any shuffle. Re-measured after the r6 buffered fuse
 # (256k-row windows, ~40x shrink vs the old per-Arrow-batch 1.3x;
-# tools/premerge_crossover.py, medians of 3 solo): classic still wins
+# tools/scale_ladder.py --only merge_classic,merge_premerge_classic,
+# medians of 3 solo): classic still wins
 # at 14 MB (1.22 s vs 1.62 s — the fuse pass floor), premerge wins
 # 1.6x at 55 MB (1.60 s vs 2.54 s) and 2.5x at 220 MB (3.52 s vs
 # 8.72 s) — the wash moved down from the old ~57 MB to ~30 MB.
@@ -1453,7 +1454,8 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
     before any shuffle — shrinks shuffle volume by the local merge
     factor (often 10-100× on merge-friendly genomic data) at the price
     of one Arrow round trip over the input. Crossover re-measured after
-    the r6 buffered fuse (tools/premerge_crossover.py, SCALING §11-r06):
+    the r6 buffered fuse (``tools/scale_ladder.py --only merge_classic,
+    merge_premerge_classic``, SCALING §11-r06):
     classic wins at 14 MB, premerge wins 1.6x at 55 MB and 2.5x at
     220 MB — default ``"auto"`` turns it on above
     ``spark.bioframe.premergeBytes`` (32 MB, the measured wash). The

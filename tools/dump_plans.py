@@ -27,13 +27,10 @@ def main():
 
     import __spark_entry__ as em
     import bench
-    from bioframe_spark.session import get_spark
 
-    spark = get_spark("dump-plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    # mirror the bench's session shape (AQE off at sub-GB scale) so the
-    # committed plans are the plans the bench actually times
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # the bench's session shape (AQE off at sub-GB scale, pinned derived
+    # inputs) so the committed plans are the plans the bench times
+    spark, _ = bench.bench_session("dump-plans", sf_dir)
 
     qs = em.queries()
     names = wanted or [n for n in bench.BENCH_QUERIES

@@ -1,6 +1,6 @@
 """Isolated per-query probe: times named bench queries under the bench's
-session shape (AQE off at sf<=1, pinned derived inputs, force_count
-action) without running the whole suite.
+session shape (``bench.bench_session``: AQE off at sf<=1, pinned derived
+inputs; force_count action) without running the whole suite.
 
 Usage: python tools/probe_query.py QUERY[,QUERY...] [reps]
 Env: SPARK_GRAFT_SF_DIR (default sf0.1). Prints per-rep seconds + median.
@@ -13,37 +13,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 import __spark_entry__ as em  # noqa: E402
-from bench import force_count  # noqa: E402
-from bioframe_spark.session import get_spark  # noqa: E402
+from bench import bench_session, force_count, n_persistent, repin  # noqa: E402
 
 
 def main():
     names = sys.argv[1].split(",")
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    spark = get_spark("probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    if sf <= 1:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    pinned = []
-    for fn_name in ("ivals_a", "ivals_b", "ivals_s", "ivals_p"):
-        cached = getattr(em, fn_name)(spark, sf_dir).cache()
-        cached.count()
-        pinned.append(cached)
-        setattr(em, fn_name, lambda spark, sf_dir, _df=cached: _df)
-
-    def _reset():
-        spark.catalog.clearCache()
-        for df in pinned:
-            df.cache().count()
-
+    spark, pinned = bench_session("probe", sf_dir)
     qs = em.queries()
-    base_cached = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    base_cached = n_persistent(spark)
     for name in names:
         fn = qs[name]
         samples = []
@@ -52,8 +32,8 @@ def main():
             t0 = time.time()
             n = force_count(fn(spark, sf_dir))
             samples.append(time.time() - t0)
-            if len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) > base_cached:
-                _reset()
+            if n_persistent(spark) > base_cached:
+                repin(spark, pinned)
         med = sorted(samples)[len(samples) // 2]
         print(f"{name}: median {med:.3f}s  reps {[round(s, 3) for s in samples]}"
               f"  ({n} rows)")
